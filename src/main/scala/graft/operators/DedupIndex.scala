@@ -37,33 +37,16 @@ object DedupIndex {
   /** Every parameter that changes band hashes or bucket ids is pinned on
     * disk and re-validated at probe time — a probe under a different config
     * would SILENTLY miss duplicates (wrong buckets pruned, wrong band
-    * hashes joined), the same footgun the Fts index pins against. */
-  // filename kept from the JSON-era pin: an index written by older code
-  // still has ITS pin read (and fails loudly on the format mismatch via
-  // requireConfigPin's missing-key check) instead of being silently
-  // treated as unpinned
-  private def configPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "/_meta/config.json")
-
-  // writer-version pin (concurrent-writer guard); the root _meta dir is
-  // never bulk-overwritten (only bands/ and shingles/ are), so it survives
-  private def versionPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "/_meta/version")
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeConfig(spark: SparkSession, path: String,
-      cfg: Map[String, Int]): Unit =
-    PartitionedIndexOps.writeConfigPin(fsOf(spark, path), configPath(path),
-      cfg.map { case (k, v) => k -> v.toString })
-
-  private def requireConfig(spark: SparkSession, path: String,
-      cfg: Map[String, Int]): Unit =
-    PartitionedIndexOps.requireConfigPin(fsOf(spark, path), configPath(path),
-      cfg.map { case (k, v) => k -> v.toString },
-      s"dedup index at $path")
+    * hashes joined), the same footgun the Fts index pins against. The pin
+    * filename is kept from the JSON-era pin: an index written by older
+    * code still has ITS pin read (and fails loudly on the format mismatch
+    * via the missing-key check) instead of being silently treated as
+    * unpinned. The root _meta dir is never bulk-overwritten (only bands/
+    * and shingles/ are), so the version pin beside it survives. */
+  private def layout(spark: SparkSession, path: String) =
+    PartitionedIndexOps.IndexLayout(spark, "dedup index", path,
+      "writeSignatureIndex", path + "/bands", Seq("wb"), path + "/shingles",
+      "dbk", path + "/_meta", "config.json", "dedup")
 
   // bandsFp: bands-table schema generation — 1 = rows carry the doc's
   // full-signature fingerprint (enables the hot-bucket-capped probe's
@@ -71,153 +54,93 @@ object DedupIndex {
   // index whose bands lack the column it collapses on: an index built by
   // pre-fingerprint code fails the pin loudly and is rebuilt.
   private def configOf(n: Int, numHashes: Int, rowsPerBand: Int,
-      nBuckets: Int, nDocBuckets: Int): Map[String, Int] =
+      nBuckets: Int, nDocBuckets: Int): Map[String, String] =
     Map("n" -> n, "numHashes" -> numHashes, "rowsPerBand" -> rowsPerBand,
       "nBuckets" -> nBuckets, "nDocBuckets" -> nDocBuckets,
-      "bandsFp" -> 1)
+      "bandsFp" -> 1).map { case (k, v) => k -> v.toString }
 
   def writeSignatureIndex(docs: DataFrame, path: String, n: Int = 3,
       numHashes: Int = 32, rowsPerBand: Int = 2,
-      nBuckets: Int = 16, nDocBuckets: Int = 16): Unit = {
-    val sg = Dedup.shingleSets(docs, n).cache()
-    val fs = fsOf(docs.sparkSession, path)
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    try {
-      requireUniqueIds(sg)
+      nBuckets: Int = 16, nDocBuckets: Int = 16): Unit =
+    PartitionedIndexOps.withCached(Dedup.shingleSets(docs, n)) { sg =>
       // CONFIG FIRST: a crash at any later point leaves the true build
       // parameters on disk, so a retry (or a differently-configured
       // caller) validates against reality instead of a vacuous pass that
       // would let mixed bucket geometries corrupt the index silently.
       // Then SHINGLES before BANDS: the upsert's "index exists" probe keys
-      // on the bands table, so a crash mid-build leaves hasIndex=false and
+      // on the bands table, so a crash mid-build leaves hasData=false and
       // the same-batch retry bulk-rebuilds cleanly — bands-first would
-      // wedge every retry on a missing shingle read.
-      writeConfig(docs.sparkSession, path,
-        configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
-      sg.withColumn("dbk", bucketOf(col("doc_id"), nDocBuckets))
-        .write.partitionBy("dbk").mode("overwrite")
-        .parquet(path + "/shingles")
-      // bands are the build's commit (hasIndex keys on them): a losing
-      // concurrent builder aborts here and the retry bulk-rebuilds
-      PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-        s"dedup index bulk build at $path")
-      // bands carry the signature fingerprint (8 B/row) so the capped
-      // probe can pre-collapse boilerplate clusters without re-reading
-      // signatures; the uncapped probe column-prunes it away
-      Dedup.signatureBandsWithFp(Dedup.minhashSignatures(sg, numHashes),
-          numHashes, rowsPerBand)
-        .withColumn("wb", bucketOf(col("bh"), nBuckets))
-        .write.partitionBy("wb").mode("overwrite").parquet(path + "/bands")
-    } finally sg.unpersist()
-  }
+      // wedge every retry on a missing shingle read. Bands carry the
+      // signature fingerprint (8 B/row) so the capped probe can
+      // pre-collapse boilerplate clusters without re-reading signatures;
+      // the uncapped probe column-prunes it away.
+      PartitionedIndexOps.configFirstBuild(layout(docs.sparkSession, path),
+        PartitionedIndexOps.requireUniqueIds(sg, "doc_id"),
+        configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets),
+        first = (sg.withColumn("dbk", bucketOf(col("doc_id"), nDocBuckets)),
+          path + "/shingles", Seq("dbk")),
+        last = (bandsOf(sg, numHashes, rowsPerBand, nBuckets),
+          path + "/bands", Seq("wb")))
+    }
 
-  /** An unordered frame with the same doc twice has no deterministic
-    * winner — both the bulk build and the upsert fail loudly; callers
-    * collapse re-crawls to one row per doc first. One aggregation job
-    * (shared guard across the persisted indexes). */
-  private def requireUniqueIds(sg: DataFrame): Unit =
-    PartitionedIndexOps.requireUniqueIds(sg, "doc_id")
+  /** The batch's fingerprinted band rows with their band bucket. */
+  private def bandsOf(sg: DataFrame, numHashes: Int, rowsPerBand: Int,
+      nBuckets: Int): DataFrame =
+    withBucket(Dedup.signatureBandsWithFp(
+      Dedup.minhashSignatures(sg, numHashes), numHashes, rowsPerBand), nBuckets)
+
+  private def withBucket(bands: DataFrame, nBuckets: Int): DataFrame =
+    bands.withColumn("wb", bucketOf(col("bh"), nBuckets))
 
   /** Incremental maintenance — fold a (re-)crawled batch into the index
-    * ([[Fts.upsertPostingsIndex]]'s ordering applied here; drive from
-    * foreachBatch for a streaming feed). A re-crawled doc's OLD bands live
-    * in buckets its new text doesn't reveal, but unlike the postings index
-    * no extra side table is needed: the doc-bucketed SHINGLE table already
-    * stores enough to recompute them. Per batch: old shingles come from a
-    * doc-bucket-pruned read, affected = old ∪ new band buckets, stale rows
-    * anti-join away inside only those buckets, and both tables rewrite only
-    * touched partitions (dynamic overwrite, staged write FIRST, then an
-    * explicit delete of buckets a re-crawl vacated — dynamic overwrite
-    * never rewrites a partition with zero rows; a crash before the delete
-    * is healed by the foreachBatch retry of the same batch). Shingle doc
-    * buckets never empty (every removed id is re-inserted), so the side
-    * write needs no delete pass. Per-batch cost scales with the batch's
+    * ([[PartitionedIndexOps.mergeUpsert]]; drive from foreachBatch for a
+    * streaming feed). A re-crawled doc's OLD bands live in buckets its
+    * new text doesn't reveal; the doc-bucketed SHINGLE table stores
+    * enough to recompute them. Per-batch cost scales with the batch's
     * band/doc spread, never the index size. */
   def upsertSignatureIndex(batch: DataFrame, path: String, n: Int = 3,
       numHashes: Int = 32, rowsPerBand: Int = 2,
       nBuckets: Int = 16, nDocBuckets: Int = 16): Unit = {
     val spark = batch.sparkSession
-    requireConfig(spark, path,
-      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bandsPath = path + "/bands"
-    val shPath = path + "/shingles"
-    if (!PartitionedIndexOps.hasPartitions(fs, bandsPath, "wb")) {
+    val ix = layout(spark, path)
+    ix.requireConfig(configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
+    if (!ix.hasData) {
       // bulk branch — also heals a build that crashed mid-write, because
       // writeSignatureIndex lands bands LAST (see its ordering comment)
       writeSignatureIndex(batch, path, n, numHashes, rowsPerBand,
         nBuckets, nDocBuckets)
       return
     }
-    val bsg = Dedup.shingleSets(batch, n).cache()
-    try upsertCore(spark, path, bsg, n, numHashes, rowsPerBand,
-      nBuckets, nDocBuckets, fs)
-    finally bsg.unpersist()
+    PartitionedIndexOps.withCached(Dedup.shingleSets(batch, n)) { bsg =>
+      upsertCore(ix, bsg, numHashes, rowsPerBand, nBuckets,
+        nDocBuckets)
+    }
   }
 
   /** The merge over a precomputed (cached) shingle frame — shared by
     * [[upsertSignatureIndex]] and [[ingestBatch]]. Caller owns bsg's
     * lifecycle; assumes the index exists (bulk routing happens above).
-    * `precomputedBands` (r13): [[ingestBatch]] already built (and cached)
-    * the batch's fingerprinted band rows for its probe — passing them in
-    * skips a second full minhash/banding pass over the batch per
-    * micro-batch. Must be exactly
+    * `precomputedBands` (r13):
+    * [[ingestBatch]] already built (and cached) the batch's fingerprinted
+    * band rows for its probe — passing them in skips a second full
+    * minhash/banding pass over the batch per micro-batch. Must be exactly
     * `Dedup.signatureBandsWithFp(Dedup.minhashSignatures(bsg, numHashes),
-    * numHashes, rowsPerBand)`. */
-  private def upsertCore(spark: SparkSession, path: String, bsg: DataFrame,
-      n: Int, numHashes: Int, rowsPerBand: Int,
-      nBuckets: Int, nDocBuckets: Int,
-      fs: org.apache.hadoop.fs.FileSystem,
+    * numHashes, rowsPerBand)`. `precomputedDbkHit`: the batch's shingle
+    * buckets, collected by ingestBatch's fused stats job after it
+    * validated the same ids. */
+  private def upsertCore(ix: PartitionedIndexOps.IndexLayout, bsg: DataFrame,
+      numHashes: Int, rowsPerBand: Int, nBuckets: Int, nDocBuckets: Int,
       precomputedBands: Option[DataFrame] = None,
       precomputedDbkHit: Option[Seq[Long]] = None): Unit = {
-    val bandsPath = path + "/bands"
-    val shPath = path + "/shingles"
-    var prunedSh: Option[DataFrame] = None
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    try {
-      // ONE job (r13): duplicate-id validation (before any index read —
-      // reject cheaply) fused with the ≤ nDocBuckets hit-bucket collect.
-      // ingestBatch precomputes BOTH inside its per-batch fused stats job
-      // (which also validated uniqueness — the precondition for passing
-      // this in) and supplies the set here.
-      val dbkHit = precomputedDbkHit.getOrElse(
-        PartitionedIndexOps.requireUniqueIdsCollectingBuckets(
-          bsg, "doc_id", bucketOf(col("doc_id"), nDocBuckets)))
-      val pruned = spark.read.parquet(shPath)
-        .filter(col("dbk").isInCollection(dbkHit)).cache()
-      prunedSh = Some(pruned)
-      val newBands = precomputedBands.getOrElse(Dedup.signatureBandsWithFp(
-          Dedup.minhashSignatures(bsg, numHashes), numHashes, rowsPerBand))
-        .withColumn("wb", bucketOf(col("bh"), nBuckets))
-      val batchIds = bsg.select(col("doc_id")).distinct()
-      // re-crawled docs' OLD bands recompute from the stored shingles; the
-      // pruned buckets (the heavy side of the index) are read ONCE and
-      // cached for both the old-band recompute and the rewrite below
-      val oldSg = pruned
-        .join(batchIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("sg"))
-      val oldBands = Dedup.signatureBandsWithFp(
-          Dedup.minhashSignatures(oldSg, numHashes), numHashes, rowsPerBand)
-        .withColumn("wb", bucketOf(col("bh"), nBuckets))
-      // ≤ nBuckets values by construction
-      val affected = newBands.select(col("wb"))
-        .union(oldBands.select(col("wb")))
-        .distinct().collect().map(_.get(0): Any).toSet
-      val merged = spark.read.parquet(bandsPath)
-        .filter(col("wb").isInCollection(affected))
-        .join(batchIds, Seq("doc_id"), "left_anti") // drop re-crawled docs
-        .unionByName(newBands)
-      PartitionedIndexOps.overwriteAffected(merged, bandsPath, "wb",
-        affected, fs)
-      val shMerged = pruned
-        .join(batchIds, Seq("doc_id"), "left_anti")
-        .unionByName(
-          bsg.withColumn("dbk", bucketOf(col("doc_id"), nDocBuckets)))
-      PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-        s"dedup index upsert at $path")
-      PartitionedIndexOps.pinWrite(shMerged, shPath, "dbk")
-    } finally prunedSh.foreach(_.unpersist())
+    val side = bsg.withColumn("dbk", bucketOf(col("doc_id"), nDocBuckets))
+    PartitionedIndexOps.mergeUpsert(ix, PartitionedIndexOps.Batch("doc_id",
+        side.select(col("doc_id"), col("dbk")),
+        precomputedBands.map(withBucket(_, nBuckets))
+          .getOrElse(bandsOf(bsg, numHashes, rowsPerBand, nBuckets)),
+        side),
+      old => bandsOf(old.select(col("doc_id"), col("sg")), numHashes,
+        rowsPerBand, nBuckets).select(col("wb")),
+      knownHit = precomputedDbkHit)
   }
 
   /** Near-dup pairs (jr, da=indexed doc, db=batch doc) for a fresh batch
@@ -246,7 +169,7 @@ object DedupIndex {
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, nBuckets: Int = 16,
       nDocBuckets: Int = 16): ProbeHandle = {
-    requireConfig(spark, path,
+    layout(spark, path).requireConfig(
       configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
     val bsg = Dedup.shingleSets(batch, n).cache()
     val (plan, cand) = probeCore(spark, path, bsg,
@@ -277,7 +200,7 @@ object DedupIndex {
       batch: DataFrame, n: Int = 3, numHashes: Int = 32,
       rowsPerBand: Int = 2, threshold: Double = 0.5, nBuckets: Int = 16,
       nDocBuckets: Int = 16, maxBucket: Int = 64): ProbeHandle = {
-    requireConfig(spark, path,
+    layout(spark, path).requireConfig(
       configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
     val bsg = Dedup.shingleSets(batch, n).cache()
     val (plan, cand) = probeCore(spark, path, bsg,
@@ -449,10 +372,9 @@ object DedupIndex {
       n: Int = 3, numHashes: Int = 32, rowsPerBand: Int = 2,
       threshold: Double = 0.5, nBuckets: Int = 16,
       nDocBuckets: Int = 16, maxBucket: Int = 64): DataFrame = {
-    requireConfig(spark, path,
-      configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
-    val fs = fsOf(spark, path)
-    if (!PartitionedIndexOps.hasPartitions(fs, path + "/bands", "wb")) {
+    val ix = layout(spark, path)
+    ix.requireConfig(configOf(n, numHashes, rowsPerBand, nBuckets, nDocBuckets))
+    if (!ix.hasData) {
       writeSignatureIndex(batch, path, n, numHashes, rowsPerBand,
         nBuckets, nDocBuckets)
       return spark.createDataFrame(
@@ -506,8 +428,8 @@ object DedupIndex {
       // long-running foreachBatch ingest loop doesn't accumulate one
       // CacheManager entry per micro-batch
       cand.unpersist()
-      upsertCore(spark, path, bsg, n, numHashes, rowsPerBand,
-        nBuckets, nDocBuckets, fs, Some(bandsFp), Some(dbkHit))
+      upsertCore(ix, bsg, numHashes, rowsPerBand, nBuckets,
+        nDocBuckets, Some(bandsFp), Some(dbkHit))
       pairs
     } finally { bandsFp.unpersist(); bsg.unpersist() }
   }

@@ -184,12 +184,6 @@ object Fts {
       .select(col("doc_id"), total.as("bm25"))
   }
 
-  /** Deployed-index form (the IVF-index pattern, [[Similarity.writeIvfIndex]]):
-    * persist the postings partitioned by a hash bucket of the term, so a
-    * query's `word IN (...)` reads only its terms' bucket directories —
-    * partition pruning at the file index, before any data is read. With B
-    * buckets a Q-term query scans ≤ Q/B of the index regardless of corpus
-    * size; bucket count trades directory fan-out against pruning ratio. */
   /** Bucket id of a column under the index's hash scheme (one definition —
     * the write and upsert paths must NEVER disagree on bucket assignment). */
   private def bucketCol(c: org.apache.spark.sql.Column, n: Int) =
@@ -198,159 +192,90 @@ object Fts {
   /** The index pins its bucket config on disk: a caller passing a
     * different nBuckets than the index was BUILT with would otherwise
     * compute wrong bucket ids and silently prune to the wrong partitions
-    * (missing postings, no error). Written at bulk build; checked by
-    * every load/upsert. */
-  // filename kept from the JSON-era pin — see DedupIndex.configPath
-  private def cfgPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "_meta/config.json")
+    * (missing postings, no error); a mismatched nDocBuckets mis-prunes the
+    * side-table read and misses a re-crawl's old buckets. Written at bulk
+    * build (config first); checked by every load/upsert. The pin filename
+    * is kept from the JSON-era pin — see DedupIndex.layout. */
+  private def layout(spark: SparkSession, path: String) =
+    PartitionedIndexOps.IndexLayout(spark, "postings index", path,
+      "writePostingsIndex", path, Seq("wb"), path + "_docs", "db",
+      path + "_meta", "config.json", "fts")
 
-  // writer-version pin (concurrent-writer guard) — sibling _meta dir
-  private def versionPath(path: String) =
-    new org.apache.hadoop.fs.Path(path + "_meta/version")
-
-  private def writeBucketConfig(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, nBuckets: Int, nDocBuckets: Int): Unit =
-    PartitionedIndexOps.writeConfigPin(fs, cfgPath(path),
-      Map("nBuckets" -> nBuckets.toString,
-        "nDocBuckets" -> nDocBuckets.toString))
-
-  // a mismatched nDocBuckets has the side-table version of the footgun:
-  // it mis-prunes the doc-meta read and misses a re-crawl's old buckets
-  private def requireBucketConfig(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, nBuckets: Int, nDocBuckets: Option[Int] = None): Unit =
-    PartitionedIndexOps.requireConfigPin(fs, cfgPath(path),
-      Map("nBuckets" -> nBuckets.toString) ++
-        nDocBuckets.map(n => "nDocBuckets" -> n.toString),
-      s"index at $path")
+  private def bucketConfig(nBuckets: Int,
+      nDocBuckets: Int): Map[String, String] =
+    Map("nBuckets" -> nBuckets.toString, "nDocBuckets" -> nDocBuckets.toString)
 
   /** The doc-bucketed side-table rows for a bucketed postings frame:
-    * doc_id → sorted occupied term buckets, partitioned by doc bucket. */
+    * doc_id → sorted occupied term buckets, partitioned by doc bucket —
+    * what lets an upsert find a re-crawled doc's OLD buckets without
+    * scanning the index. */
   private def docMeta(bucketed: DataFrame, nDocBuckets: Int): DataFrame =
     bucketed.groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("wb"))).as("wbs"))
       .withColumn("db", bucketCol(col("doc_id"), nDocBuckets))
 
+  /** Deployed-index form (the IVF-index pattern, [[Similarity.writeIvfIndex]]):
+    * persist the postings partitioned by a hash bucket of the term, so a
+    * query's `word IN (...)` reads only its terms' bucket directories —
+    * partition pruning at the file index, before any data is read. With B
+    * buckets a Q-term query scans ≤ Q/B of the index regardless of corpus
+    * size; bucket count trades directory fan-out against pruning ratio. */
   def writePostingsIndex(postings: DataFrame, path: String,
-      nBuckets: Int = 64, nDocBuckets: Int = 64): Unit = {
-    val bucketed = postings
-      .withColumn("wb", bucketCol(col("word"), nBuckets))
-      .persist() // written below AND aggregated into the side table
-    try {
-      // config FIRST: a crash at any later point leaves the true bucket
-      // geometry on disk, so every retry or later caller validates against
-      // reality (the merge branch never rewrites config — config-last left
-      // a window where the pin was lost forever)
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-        postings.sparkSession.sparkContext.hadoopConfiguration)
-      val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-      writeBucketConfig(fs, path, nBuckets, nDocBuckets)
-      bucketed.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("wb").parquet(path)
-      // doc-bucketed side table (doc_id → occupied term buckets): what lets
-      // an incremental upsert find a re-crawled doc's OLD buckets without
-      // scanning the index (see upsertPostingsIndex)
-      PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-        s"postings index bulk build at $path")
-      docMeta(bucketed, nDocBuckets)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("db").parquet(path + "_docs")
-    } finally bucketed.unpersist()
-  }
+      nBuckets: Int = 64, nDocBuckets: Int = 64): Unit =
+    // written below AND aggregated into the side table
+    PartitionedIndexOps.withCached(
+        postings.withColumn("wb", bucketCol(col("word"), nBuckets))) { b =>
+      build(layout(postings.sparkSession, path), b, nBuckets, nDocBuckets,
+        check = ())
+    }
+
+  /** Config-first build ([[PartitionedIndexOps.configFirstBuild]]):
+    * postings, then the side table as the commit. A crash between the two
+    * leaves postings without a side table, which the next upsert
+    * re-derives from the postings. */
+  private def build(ix: PartitionedIndexOps.IndexLayout, bucketed: DataFrame,
+      nBuckets: Int, nDocBuckets: Int, check: => Unit): Unit =
+    PartitionedIndexOps.configFirstBuild(ix, check,
+      bucketConfig(nBuckets, nDocBuckets),
+      first = (bucketed, ix.main, ix.partCols),
+      last = (docMeta(bucketed, nDocBuckets), ix.side, Seq(ix.sideBucket)))
 
   /** Incremental index maintenance — fold a (re-)crawled document batch
-    * into a persisted postings index (the [[Lakehouse.scd2MergeIntoBuckets]]
-    * pattern applied to postings). The subtlety term-partitioning creates:
-    * a re-crawled doc's OLD postings live in the buckets of its OLD terms,
-    * which the new text doesn't reveal — so the index keeps a doc-bucketed
-    * side table (`<path>_docs`: doc_id → the wb buckets its postings
-    * occupy). Per batch: old buckets come from a doc-bucket-pruned side
-    * read, affected = old ∪ new term buckets, stale rows anti-join away
-    * inside only those buckets, and both tables rewrite only touched
-    * partitions (dynamic overwrite). Per-batch cost scales with the
-    * batch's term/doc spread, never the index size. Drive it from
-    * `foreachBatch` for a streaming crawl feed. */
+    * into a persisted postings index ([[PartitionedIndexOps.mergeUpsert]];
+    * the [[Lakehouse.scd2MergeIntoBuckets]] pattern applied to postings).
+    * The subtlety term-partitioning creates: a re-crawled doc's OLD
+    * postings live in the buckets of its OLD terms, which the new text
+    * doesn't reveal — the `<path>_docs` side table (doc_id → the wb
+    * buckets its postings occupy) names them. The batch ids come from the
+    * RAW batch, not its postings, so a doc re-crawled to no tokens still
+    * has its old postings removed. Per-batch cost scales with the batch's
+    * term/doc spread, never the index size. Drive it from `foreachBatch`
+    * for a streaming crawl feed; a batch carrying the same doc twice is
+    * rejected (it would silently merge the copies' positions and double
+    * tf). */
   def upsertPostingsIndex(newDocs: DataFrame, path: String, docIdCol: String,
       textCol: String, nBuckets: Int = 64, nDocBuckets: Int = 64): Unit = {
     val spark = newDocs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireBucketConfig(fs, path, nBuckets, Some(nDocBuckets))
-    // a batch carrying the same doc twice would silently merge the copies'
-    // positions and double tf — same guard as the sibling indexes. ONE
-    // job (r13): the validation is fused with the ≤ nDocBuckets doc-bucket
-    // collect the merge branch needs (previously a second aggregation over
-    // the batch's postings). Derived from the RAW batch ids, not
-    // batchMeta: same bucket hash over the same ids, except a doc whose
-    // new text has no tokens (no postings → no meta row) now still
-    // contributes its bucket — so a re-crawl-to-empty doc's OLD buckets
-    // are covered by the pruned side read below instead of silently
-    // surviving.
-    val dbs = PartitionedIndexOps.requireUniqueIdsCollectingBuckets(
-      newDocs, docIdCol, bucketCol(col(docIdCol), nDocBuckets))
-    val claimed = PartitionedIndexOps.claimVersion(fs, versionPath(path))
-    val batch = positionalPostings(newDocs, docIdCol, textCol)
-      .withColumn("wb", bucketCol(col("word"), nBuckets))
-    val batchIds = batch.select(col("doc_id")).distinct()
-    val batchMeta = docMeta(batch, nDocBuckets)
-    val docsPath = path + "_docs"
-    batch.persist() // reused by ids/meta/affected/merged below — built once
-    try {
-      if (PartitionedIndexOps.hasPartitions(fs, path, "wb")) {
-        // recovery path: a bulk build that died between its two writes
-        // leaves the index without its side table — rebuild the needed
-        // meta from the index itself (one full scan, only ever paid once)
-        val docsExists = fs.exists(new org.apache.hadoop.fs.Path(docsPath))
-        val oldMeta =
-          (if (docsExists)
-            spark.read.parquet(docsPath).filter(col("db").isInCollection(dbs))
-          else docMeta(spark.read.parquet(path), nDocBuckets))
-            .join(batchIds, Seq("doc_id"), "left_semi")
-        val affected = oldMeta.select(explode(col("wbs")).as("wb"))
-          .union(batch.select(col("wb"))).distinct()
-          .collect().map(_.get(0)).toSeq
-        val merged = spark.read.parquet(path)
-          .filter(col("wb").isInCollection(affected))
-          .join(batchIds, Seq("doc_id"), "left_anti") // drop re-crawled docs
-          .unionByName(batch)
-        // staged-overwrite-then-delete-vacated ordering — shared with the
-        // dedup signature index; rationale on PartitionedIndexOps
-        PartitionedIndexOps.overwriteAffected(merged, path, "wb",
-          affected.toSet, fs)
-        // crash seam (production no-op): the window between the index
-        // write above and the side-table write below is the one the
-        // retry-heals contract covers — FtsCrashRecoverySpec SIGKILLs a
-        // real driver JVM parked here and asserts heal-to-scratch
-        graft.streaming.CrashPoints.reached("fts.upsert.between-writes")
-        // the side table second: if a failure lands between the two writes,
-        // re-running the SAME batch (foreachBatch retry semantics) still
-        // heals — old meta lists the doc's previous buckets, the retry's
-        // affected set covers previous ∪ current, and the doc-keyed
-        // anti-join + union is idempotent. Doc buckets can never empty
-        // (every removed id is re-inserted), so no delete pass is needed.
-        // In the recovery case the main index was just rewritten, so the
-        // whole side table re-derives from it directly.
-        val docsMerged =
-          if (docsExists)
-            spark.read.parquet(docsPath)
-              .filter(col("db").isInCollection(dbs))
-              .join(batchIds, Seq("doc_id"), "left_anti")
-              .unionByName(batchMeta)
-          else docMeta(spark.read.parquet(path), nDocBuckets)
-        PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-          s"postings index upsert at $path")
-        PartitionedIndexOps.pinWrite(docsMerged, docsPath, "db")
-      } else {
-        // config first — same crash-consistency rationale as
-        // writePostingsIndex
-        writeBucketConfig(fs, path, nBuckets, nDocBuckets)
-        batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("wb").parquet(path)
-        PartitionedIndexOps.requireVersion(fs, versionPath(path), claimed,
-          s"postings index bulk branch at $path")
-        batchMeta.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("db").parquet(docsPath)
+    val ix = layout(spark, path)
+    ix.requireConfig(bucketConfig(nBuckets, nDocBuckets))
+    val ids = newDocs.select(col(docIdCol).as("doc_id"),
+      bucketCol(col(docIdCol), nDocBuckets).as("db"))
+    PartitionedIndexOps.withCached(positionalPostings(newDocs, docIdCol,
+        textCol).withColumn("wb", bucketCol(col("word"), nBuckets))) { batch =>
+      if (!ix.hasData)
+        build(ix, batch, nBuckets, nDocBuckets,
+          check = PartitionedIndexOps.requireUniqueIds(ids, "doc_id"))
+      else PartitionedIndexOps.withCached(ids) { cachedIds =>
+        PartitionedIndexOps.mergeUpsert(ix, PartitionedIndexOps.Batch(
+            "doc_id", cachedIds, batch, docMeta(batch, nDocBuckets)),
+          _.select(explode(col("wbs")).as("wb")),
+          // recovery: a bulk build that died between its two writes left
+          // the postings without their side table — derive every doc's
+          // side row from the postings (one full scan, only ever paid once)
+          sideRows = if (ix.fs.exists(new org.apache.hadoop.fs.Path(ix.side)))
+            None else Some(docMeta(spark.read.parquet(path), nDocBuckets)))
       }
-    } finally batch.unpersist()
+    }
   }
 
   /** Read back only the buckets the query terms hash into. The returned
@@ -359,8 +284,7 @@ object Fts {
     * prune, so every Fts query operator composes unchanged. */
   def loadPostings(spark: org.apache.spark.sql.SparkSession, path: String,
       terms: Seq[String], nBuckets: Int = 64): DataFrame = {
-    requireBucketConfig(new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), path, nBuckets)
+    layout(spark, path).requireConfig(Map("nBuckets" -> nBuckets.toString))
     // bucket ids computed driver-side with the SAME hash the write used
     // (functions.xxhash64 == XxHash64 expression, seed 42) — no job, no
     // collect, just Q literal evaluations

@@ -1,19 +1,108 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
-/** The delicate partition-replacement machinery shared by the persisted
-  * indexes ([[Fts]] postings, [[DedupIndex]] signatures): staged dynamic
-  * overwrite FIRST, then an explicit delete of buckets the batch vacated.
-  * Dynamic partition overwrite stages and commits the partitions present
-  * in the output, so co-bucketed rows of untouched docs are never exposed
-  * to a crash window; it never rewrites a partition with zero rows, so
-  * vacated buckets need the explicit delete afterwards. A crash before
-  * the delete leaves stale vacated rows, which a retry of the SAME batch
-  * removes (its affected set re-covers them). One copy of this ordering —
-  * a fix here applies to every index.
+/** The one write lifecycle of every persisted index family — dedup
+  * signatures, LSH, multi-table LSH, IVF, IVF-PQ and FTS postings. Each
+  * family keeps a main table partitioned by its bucket geometry and an
+  * id-bucketed side table (id → the main partitions the id occupies; an
+  * id's OLD partitions are not recomputable from its new content — the
+  * reference's delete-then-add-by-id upsert, Chroma,
+  * scripts/scrape_store_embed.py:79-86). A family supplies only what is
+  * its own ([[IndexLayout]]: partition columns, side-table path and
+  * bucket column, pin location; per call: the batch's main- and
+  * side-table rows, its config map, and the map from old side rows to
+  * the main partitions they occupied). The steps live here, once:
+  *
+  *   - check, THEN claim ([[guarded]]): a batch is validated (duplicate
+  *     ids) before the writer-version claim is published, so a rejected
+  *     batch never disturbs an in-flight writer's claim;
+  *   - [[mergeUpsert]]: fused id-check + side-bucket collect, pruned
+  *     side read, affected = old ∪ new partitions, staged dynamic
+  *     overwrite of the affected main partitions FIRST, then an explicit
+  *     delete of partitions the batch vacated (dynamic overwrite never
+  *     rewrites a partition with zero rows), then the version check and
+  *     the side-table write as the commit. A crash anywhere before the
+  *     commit is healed by a retry of the SAME batch (foreachBatch
+  *     semantics): the stale side rows still name the true old
+  *     partitions, so the retry's affected set re-covers everything the
+  *     crashed attempt touched. The window between the two table writes
+  *     is the `<seam>.upsert.between-writes` crash point
+  *     ([[graft.streaming.CrashPoints]]) — FTS's is
+  *     `fts.upsert.between-writes`, which FtsCrashRecoverySpec SIGKILLs a
+  *     real driver at.
+  *
+  * Bulk builds have two crash contracts, and both exist on purpose:
+  *
+  *   - [[bulkBuild]] (LSH, multi-LSH, IVF, IVF-PQ): stale pin DELETED
+  *     first, then data, side table, config pin LAST. A crash leaves
+  *     data without a pin, which every upsert and probe refuses
+  *     ([[IndexLayout.requirePin]]: rebuild required; [[upsertOrBuild]]
+  *     routes these families' upserts). These builds are
+  *     not keyed by batch and their pins carry trained models (planes,
+  *     centroids, codebooks): a crashed rebuild under a retrained model
+  *     must never validate against the old pin beside half-new data.
+  *   - [[configFirstBuild]] (dedup, FTS): config pin FIRST, then the two
+  *     tables. Their pins hold only bucket geometry, so writing the true
+  *     geometry first means every retry validates against reality, and
+  *     an interrupted build heals by retrying instead of refusing —
+  *     dedup writes shingles before bands (its "index exists" test keys
+  *     on bands, so a crashed build re-routes to a clean rebuild); FTS
+  *     writes postings before the side table and its upsert re-derives a
+  *     missing side table from the postings.
   */
 object PartitionedIndexOps {
+
+  /** Where one family keeps its tables and pins. `path` is the caller's
+    * index path (named in messages); `main`/`side` are the two table
+    * directories, `meta` the pin directory (a sibling of the data, so a
+    * bulk overwrite of the data never wipes the version pin). `name`,
+    * `builder` and `seam` only label messages and the crash point. */
+  final case class IndexLayout(spark: SparkSession, name: String,
+      path: String, builder: String, main: String, partCols: Seq[String],
+      side: String, sideBucket: String, meta: String, pinFile: String,
+      seam: String) {
+    lazy val fs: FileSystem = new Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def pinPath: Path = new Path(meta + "/" + pinFile)
+    def versionPath: Path = new Path(meta + "/version")
+
+    /** Does the main table hold at least one partition? A bare
+      * pre-created (or fully emptied) directory routes callers to their
+      * bulk build instead of a doomed schema-less merge read. */
+    def hasData: Boolean = {
+      val p = new Path(main)
+      fs.exists(p) && fs.listStatus(p)
+        .exists(_.getPath.getName.startsWith(partCols.head + "="))
+    }
+
+    /** The strict pin check of every upsert and probe of a pin-last
+      * family: a missing pin beside data is a never-built or crashed
+      * build (rebuild required), and `matches` must accept the stored
+      * config or the call would route the wrong partitions. Returns the
+      * stored config. */
+    def requirePin(probing: Boolean)(matches: Map[String, String] => Boolean,
+        mismatch: => String): Map[String, String] = {
+      val stored = readConfigPin(fs, pinPath)
+      require(stored.isDefined,
+        if (probing)
+          s"$name at $path has no $pinFile pin (never built, or a crashed " +
+            s"build) — build it with $builder before probing"
+        else
+          s"$name at $path has data but no $pinFile pin (crashed build?) " +
+            s"— rebuild it with $builder before upserting")
+      require(matches(stored.get), mismatch)
+      stored.get
+    }
+
+    /** The tolerant key-by-key check of the config-first families
+      * ([[requireConfigPin]]: an absent pin passes, a present pin must
+      * hold every expected key and value). */
+    def requireConfig(expected: Map[String, String]): Unit =
+      requireConfigPin(fs, pinPath, expected, s"$name at $path")
+  }
 
   /** Write a small metadata/pin file (config json, centroid fingerprint).
     * One copy of the create-overwrite-UTF8 idiom for every index. */
@@ -25,7 +114,7 @@ object PartitionedIndexOps {
   }
 
   /** Read a pin file back, None if absent. */
-  def readPin(fs: org.apache.hadoop.fs.FileSystem,
+  private def readPin(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path): Option[String] =
     if (!fs.exists(path)) None
     else {
@@ -40,12 +129,12 @@ object PartitionedIndexOps {
     * index reuses this instead of inventing a fourth format. Values are
     * strings (numeric configs render via toString); keys and values must
     * not contain '=' or newlines. */
-  def writeConfigPin(fs: org.apache.hadoop.fs.FileSystem,
+  private def writeConfigPin(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path, cfg: Map[String, String]): Unit =
     writePin(fs, path, cfg.toSeq.sortBy(_._1)
       .map { case (k, v) => s"$k=$v" }.mkString("\n"))
 
-  def readConfigPin(fs: org.apache.hadoop.fs.FileSystem,
+  private def readConfigPin(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path): Option[Map[String, String]] =
     readPin(fs, path).map(_.linesIterator
       .filter(_.contains("="))
@@ -60,7 +149,7 @@ object PartitionedIndexOps {
     * first) — but a pin that exists while MISSING a checked key is an
     * error, not a pass: a truncated or legacy-format pin must fail loudly
     * (rebuild) rather than validate any caller geometry. */
-  def requireConfigPin(fs: org.apache.hadoop.fs.FileSystem,
+  private def requireConfigPin(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path, expected: Map[String, String],
       what: String): Unit =
     readConfigPin(fs, path).foreach { stored =>
@@ -164,26 +253,11 @@ object PartitionedIndexOps {
         "already staged).")
   }
 
-  /** Does `path` hold at least one `<partCol>=` partition? A bare
-    * pre-created (or fully emptied) directory must route callers to their
-    * bulk-build branch instead of a doomed schema-less merge read. */
-  def hasPartitions(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      partCol: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith(partCol + "="))
-  }
-
   /** Pin `df` (localCheckpoint — the plan may lazily read the very path
     * being overwritten) and dynamic-overwrite its partitions into `path`.
     * Returns the pinned frame for post-write inspection. The shared core
     * for every self-referential partition rewrite. */
-  def pinWrite(df: DataFrame, path: String, partCol: String): DataFrame =
-    pinWrite(df, path, Seq(partCol))
-
-  /** Multi-level variant (e.g. the multi-table LSH index's `tbl=/bucket=`
-    * layout) — same pin + dynamic-overwrite contract. */
-  def pinWrite(df: DataFrame, path: String,
+  private def pinWrite(df: DataFrame, path: String,
       partCols: Seq[String]): DataFrame = {
     val pinned = df.localCheckpoint(true)
     pinned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -206,7 +280,7 @@ object PartitionedIndexOps {
     * corrupts the index (doubled tf, two vectors per id). One aggregation
     * job; callers collapse re-crawls to one row per doc first. */
   def requireUniqueIds(df: DataFrame, idCol: String): Unit = {
-    import org.apache.spark.sql.functions.{count, countDistinct, col, lit}
+    import org.apache.spark.sql.functions.{count, countDistinct}
     val r = df.agg(count(lit(1)).as("n"),
       countDistinct(col(idCol)).as("nd")).head
     require(r.getLong(0) == r.getLong(1),
@@ -226,7 +300,7 @@ object PartitionedIndexOps {
     * the caller touches the index. */
   def requireUniqueIdsCollectingBuckets(df: DataFrame, idCol: String,
       bucket: org.apache.spark.sql.Column): Seq[Long] = {
-    import org.apache.spark.sql.functions.{col, collect_set, count, countDistinct, lit}
+    import org.apache.spark.sql.functions.{collect_set, count, countDistinct}
     val r = df.agg(count(lit(1)).as("n"), countDistinct(col(idCol)).as("nd"),
       collect_set(bucket).as("bks")).head
     require(r.getLong(0) == r.getLong(1),
@@ -258,7 +332,6 @@ object PartitionedIndexOps {
     * long so the read prunes to the over-threshold partitions only. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
       partCol: String, maxFiles: Int = 4): Seq[Long] = {
-    import org.apache.spark.sql.functions.col
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(path)
@@ -273,7 +346,7 @@ object PartitionedIndexOps {
       .toSeq
     if (over.isEmpty) return Seq.empty
     pinWrite(compactionSlice(spark, path, partCol, over)
-      .repartition(col(partCol)), path, partCol)
+      .repartition(col(partCol)), path, Seq(partCol))
     over
   }
 
@@ -295,7 +368,6 @@ object PartitionedIndexOps {
     * string-partition compactor. */
   def compactMulti(spark: org.apache.spark.sql.SparkSession, path: String,
       partCols: Seq[String], maxFiles: Int = 4): Seq[(Long, Long)] = {
-    import org.apache.spark.sql.functions.col
     require(partCols.length == 2,
       "compactMulti handles exactly two partition levels")
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -328,25 +400,16 @@ object PartitionedIndexOps {
   private[graft] def compactionSlice(
       spark: org.apache.spark.sql.SparkSession, path: String,
       partCol: String, over: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.col
     spark.read.parquet(path)
       .filter(col(partCol).cast("long").isInCollection(over))
   }
 
   /** Replace the `affected` partitions of `path` with `merged`'s rows:
-    * [[pinWrite]], then delete the affected buckets absent from the output
-    * (vacated by a re-crawl). The `present` collect is bounded by the
-    * caller's bucket count. */
-  def overwriteAffected(merged: DataFrame, path: String, partCol: String,
-      affected: Set[Any],
-      fs: org.apache.hadoop.fs.FileSystem): Unit =
-    overwriteAffectedMulti(merged, path, Seq(partCol),
-      affected.map(Seq(_)), fs)
-
-  /** Multi-level variant: `affected` holds one value sequence per
-    * partition (e.g. Seq(tbl, bucket)); vacated directories delete as
-    * `tbl=t/bucket=b` nested paths. Same staged-overwrite-then-delete
-    * crash ordering as the single-level form.
+    * [[pinWrite]], then delete the affected partitions absent from the
+    * output (vacated by a re-crawl). `affected` holds one value sequence
+    * per partition (e.g. Seq(tbl, bucket)); vacated directories delete as
+    * nested `tbl=t/bucket=b` paths. The `present` collect is bounded by
+    * the caller's partition geometry.
     *
     * Present-vs-affected comparison is on the STRING rendering of each
     * value — the directory-name space both sides ultimately live in. Raw
@@ -354,9 +417,8 @@ object PartitionedIndexOps {
     * typically Long while a read-back partition column infers Int, and a
     * typed mismatch would classify every present partition as vacated
     * and DELETE LIVE DATA. */
-  def overwriteAffectedMulti(merged: DataFrame, path: String,
-      partCols: Seq[String], affected: Set[Seq[Any]],
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
+  private def overwriteAffected(merged: DataFrame, path: String,
+      partCols: Seq[String], affected: Set[Seq[Any]], fs: FileSystem): Unit = {
     val pinned = pinWrite(merged, path, partCols)
     val present: Set[Seq[String]] =
       pinned.select(partCols.map(pinned(_)): _*).distinct()
@@ -367,7 +429,135 @@ object PartitionedIndexOps {
       .filterNot(present.contains).foreach { vs =>
       val rel = partCols.zip(vs).map { case (c, v) => s"$c=$v" }
         .mkString("/")
-      fs.delete(new org.apache.hadoop.fs.Path(path, rel), true)
+      fs.delete(new Path(path, rel), true)
     }
+  }
+
+  /** The main-table read predicate selecting the `keys` partitions:
+    * `isInCollection` for one level; for two levels an OR of per-outer-
+    * value `isInCollection`s, so both land as partition filters. */
+  private def keyFilter(partCols: Seq[String], keys: Set[Seq[Any]]): Column =
+    partCols match {
+      case Seq(c) => col(c).isInCollection(keys.map(_.head))
+      case Seq(outer, inner) =>
+        keys.groupBy(_.head).map { case (t, ks) =>
+          col(outer) === lit(t) && col(inner).isInCollection(ks.map(_(1)))
+        }.reduceOption(_ || _).getOrElse(lit(false))
+    }
+
+  /** Cache `df` for the duration of `f`, released however `f` exits. */
+  def withCached[T](df: DataFrame)(f: DataFrame => T): T = {
+    val c = df.cache()
+    try f(c) finally c.unpersist()
+  }
+
+  /** Check, claim, stage, version check, commit — the order every build
+    * and upsert writes in. `check` runs before the claim is published,
+    * so a rejected batch leaves the version pin (and every in-flight
+    * writer's claim) untouched; `stage` holds the retry-healable writes;
+    * `commit` is the one write that publishes the result, reached only
+    * while the pin still holds this writer's claim. */
+  private def guarded[A, B](ix: IndexLayout, op: String)(check: => A)(
+      stage: A => B)(commit: B => Unit): Unit = {
+    val checked = check
+    val claimed = claimVersion(ix.fs, ix.versionPath)
+    val staged = stage(checked)
+    requireVersion(ix.fs, ix.versionPath, claimed,
+      s"${ix.name} $op at ${ix.path}")
+    commit(staged)
+  }
+
+  private def overwrite(df: DataFrame, path: String,
+      partCols: Seq[String]): Unit =
+    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy(partCols: _*).parquet(path)
+
+  /** One batch as a family lays it out: `ids` carries `idCol` and the
+    * side-bucket column — validated, and the anti-join key that drops
+    * re-crawled rows (read up to four times: pass a cached frame or a
+    * projection of one); `main`/`side` are the batch's rows in each table. */
+  final case class Batch(idCol: String, ids: DataFrame, main: DataFrame,
+      side: DataFrame)
+
+  /** Pin-last bulk build (see the object doc). `b.ids` is the batch with
+    * every derived column, one row per id — cached for the two writes,
+    * which are its projections. Duplicate ids are rejected before the
+    * claim. */
+  def bulkBuild(ix: IndexLayout, b: Batch, cfg: Map[String, String]): Unit =
+    guarded(ix, "bulk build")(requireUniqueIds(b.ids, b.idCol)) { _ =>
+      ix.fs.delete(ix.pinPath, false)
+      withCached(b.ids) { _ =>
+        overwrite(b.main, ix.main, ix.partCols)
+        overwrite(b.side, ix.side, Seq(ix.sideBucket))
+      }
+    } { _ => writeConfigPin(ix.fs, ix.pinPath, cfg) }
+
+  /** The upsert of a pin-last family: an index without data routes to
+    * [[bulkBuild]]; otherwise the stored pin must exist and satisfy
+    * `matches` (else `mismatch`), and the batch — `b.ids` as in
+    * [[bulkBuild]], cached here — merges in through [[mergeUpsert]]. */
+  def upsertOrBuild(ix: IndexLayout, b: Batch, cfg: Map[String, String])(
+      matches: Map[String, String] => Boolean, mismatch: => String): Unit =
+    if (!ix.hasData) bulkBuild(ix, b, cfg)
+    else {
+      ix.requirePin(probing = false)(matches, mismatch)
+      withCached(b.ids)(_ => mergeUpsert(ix, b))
+    }
+
+  /** Config-first bulk build (see the object doc): `check` validates the
+    * batch before the claim; the config pin, then `first` stage; `last`
+    * is the commit write. Each is a full overwrite of one table. */
+  def configFirstBuild(ix: IndexLayout, check: => Unit,
+      cfg: Map[String, String], first: (DataFrame, String, Seq[String]),
+      last: (DataFrame, String, Seq[String])): Unit =
+    guarded(ix, "bulk build")(check) { _ =>
+      writeConfigPin(ix.fs, ix.pinPath, cfg)
+      (overwrite _).tupled(first)
+    } { _ => (overwrite _).tupled(last) }
+
+  /** The merge upsert of every family (see the object doc). `oldKeys`
+    * maps the batch ids' OLD side rows to the main partition keys
+    * (columns `partCols`) they occupied — by default the side table
+    * stores them. `knownHit` passes side buckets an earlier fused job of
+    * the caller already collected (after validating the same ids);
+    * `sideRows` replaces the pruned side read (FTS's re-derivation of a
+    * side table lost to a crashed build). Cost ∝ the batch's partition
+    * spread, never the index size. */
+  def mergeUpsert(ix: IndexLayout, b: Batch,
+      oldKeys: DataFrame => DataFrame = identity,
+      knownHit: Option[Seq[Long]] = None,
+      sideRows: Option[DataFrame] = None): Unit = {
+    val Batch(idCol, ids, main, side) = b
+    var pruned: Option[DataFrame] = None
+    try guarded(ix, "upsert")(knownHit.getOrElse(
+        // ≤ the side table's bucket count by construction
+        requireUniqueIdsCollectingBuckets(ids, idCol,
+          col(ix.sideBucket)))) { hit =>
+      val batchIds = ids.select(col(idCol)).distinct()
+      // replacement side rows may be derived from the main table, which
+      // the overwrite below rewrites (and re-caches by path): pin them
+      // eagerly, not as a cache a recompute would re-read stale files for
+      val p = sideRows.map(_.localCheckpoint(true))
+        .getOrElse(ix.spark.read.parquet(ix.side)
+          .filter(col(ix.sideBucket).isInCollection(hit)).cache())
+      pruned = Some(p)
+      val keyCols = ix.partCols.map(col)
+      // ≤ the main table's partition count by construction
+      val affected = oldKeys(p.join(batchIds, Seq(idCol), "left_semi"))
+        .select(keyCols: _*).union(main.select(keyCols: _*)).distinct()
+        .collect().map(_.toSeq).toSet
+      val merged = ix.spark.read.parquet(ix.main)
+        .filter(keyFilter(ix.partCols, affected))
+        .join(batchIds, Seq(idCol), "left_anti") // drop re-crawled rows
+        .unionByName(main)
+      overwriteAffected(merged, ix.main, ix.partCols, affected, ix.fs)
+      graft.streaming.CrashPoints.reached(s"${ix.seam}.upsert.between-writes")
+      // no delete pass: a removed id is re-inserted into its id-stable
+      // bucket (an FTS doc re-crawled to no postings is the exception —
+      // its stale side row, if alone in its bucket, only names buckets a
+      // later upsert re-checks)
+      p.join(batchIds, Seq(idCol), "left_anti").unionByName(side)
+    } { sideMerged => pinWrite(sideMerged, ix.side, Seq(ix.sideBucket)) }
+    finally pruned.foreach(_.unpersist())
   }
 }

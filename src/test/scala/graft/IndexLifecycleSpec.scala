@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ONE parameterized lifecycle matrix over every persisted index family
-  * ({dedup signatures, LSH, multi-table LSH, IVF-PQ, FTS postings}),
+  * ({dedup signatures, LSH, multi-table LSH, IVF, IVF-PQ, FTS postings}),
   * replacing the per-family copies of the shared invariants: a new
   * invariant added to [[IndexLifecycleSpec.families]]'s loop lands in all
-  * five families at once (the round-8 verdict's ask — the writer-token
+  * six families at once (the round-8 verdict's ask — the writer-token
   * guard had to be hand-propagated five times).
   *
   * Matrix invariants (× every family):
@@ -24,10 +24,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *   2. compaction: compacting fragmented partitions (maxFiles=1) rewrites
   *      at least one partition of the main table, never increases the
   *      file count, and leaves every table's CONTENT byte-identical.
+  *   3. check before claim: a duplicate-id batch is rejected without
+  *      publishing a version claim — on the bulk-build branch and on the
+  *      merge branch alike — so a concurrent writer's earlier claim still
+  *      validates afterwards.
   *
   * Family-SPECIFIC semantics (pruned-scan shapes, payload pins, vacated
   * buckets, recall) stay in the per-family specs; this matrix owns only
-  * the invariants all five share. */
+  * the invariants all six share. */
 class IndexLifecycleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -143,6 +147,15 @@ class IndexLifecycleSpec extends AnyFunSuite {
       corpusFinal = () => vecsFinal,
       tables = Seq("" -> Seq("tbl", "bucket"), "_docs" -> Seq("dbk")),
       versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version")),
+    Family("ivf",
+      build = (c, p) =>
+        Similarity.writeIvfIndex(c, "embedding", "vec_id", cents, p),
+      upsert = (b, p) =>
+        Similarity.upsertIvfIndex(b, "embedding", "vec_id", cents, p),
+      corpusA = () => vecsA, batchB = () => vecsB,
+      corpusFinal = () => vecsFinal,
+      tables = Seq("" -> Seq("list_id"), "_docs" -> Seq("dbk")),
+      versionPath = p => new org.apache.hadoop.fs.Path(p + "_meta/version")),
     Family("ivf-pq",
       build = (c, p) =>
         IvfPq.writeIvfPqIndex(c, "embedding", "vec_id", cents, books, p),
@@ -218,5 +231,24 @@ class IndexLifecycleSpec extends AnyFunSuite {
       // content, so re-compacting is a no-op (idempotence)
       assert(compactAll(f, dir).isEmpty,
         s"${f.name}: re-compacting a just-compacted index must be a no-op")
+    }
+
+  // ---- invariant 3: a rejected batch leaves writer claims intact ----
+  for (f <- families)
+    test(s"${f.name}: a rejected duplicate batch does not disturb a " +
+      "concurrent writer's claim") {
+      val dir = tmp(f.name.replace('-', '_') + "_dup")
+      val vp = f.versionPath(dir)
+      def dup(df: DataFrame) = df.unionByName(df.limit(1))
+      def rejectedKeepsClaim(batch: DataFrame): Unit = {
+        val inFlight = PartitionedIndexOps.claimVersion(fs, vp)
+        val ex = intercept[IllegalArgumentException](f.upsert(batch, dir))
+        assert(ex.getMessage.contains("duplicate"))
+        PartitionedIndexOps.requireVersion(fs, vp, inFlight,
+          s"${f.name} writer in flight across a rejected batch")
+      }
+      rejectedKeepsClaim(dup(f.corpusA())) // empty index: bulk branch
+      f.build(f.corpusA(), dir)
+      rejectedKeepsClaim(dup(f.batchB())) // merge branch
     }
 }

@@ -103,6 +103,16 @@ class IvfSpec extends AnyFunSuite {
       Similarity.upsertIvfIndex(e.limit(1), "embedding", "vec_id", cents, dir)
     }
     assert(ex2.getMessage.contains("crashed build"))
+    // ...and so must a probe, of that crashed build and of a never-built
+    // index, instead of silently serving whatever data is on disk
+    val never = java.nio.file.Files.createTempDirectory("ivf_never").toString
+    for (p <- Seq(dir, never)) {
+      val ex3 = intercept[IllegalArgumentException] {
+        Similarity.probeIvfIndex(spark, p, "embedding", "vec_id",
+          queryVec(5), 10, Seq(0, 1))
+      }
+      assert(ex3.getMessage.contains("crashed build"))
+    }
   }
 
   test("re-crawled vector that moved lists leaves no stale copy behind") {

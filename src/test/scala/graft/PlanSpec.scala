@@ -200,25 +200,23 @@ class PlanSpec extends AnyFunSuite {
     // and are not in scope.)
     val bounded: Map[String, (Int, String)] = Map(
       "operators/Similarity.scala" ->
-        (4, "IVF trainer: nLists-capped centroid init + one mean-vector row per list; upsert: doc-bucket + affected-list id sets, <= nDocBuckets / <= nLists"),
+        (2, "IVF trainer: nLists-capped centroid init + one mean-vector row per list"),
       "operators/BpeTrainer.scala" ->
         (1, "BPE argmax merge rule: limit(1), one row per round"),
       "operators/Lakehouse.scala" ->
         (1, "CDC bucket merge: <= nBuckets affected-bucket ids"),
-      "operators/Fts.scala" ->
-        (1, "postings upsert: affected-term-bucket id set, <= nBuckets (the doc-bucket set rides the fused requireUniqueIdsCollectingBuckets agg)"),
       "operators/DedupIndex.scala" ->
-        (5, "probe: hit band-bucket set (<= nBuckets, fused-stats fallback) + candidate shingle-bucket set, uncapped and capped variants (<= nDocBuckets, + 1 margin row on the capped path); ingestBatch: fused batch-stats rows (2: validation counts + <= nBuckets/nDocBuckets bucket sets); upsert: affected-band-bucket id set (<= nBuckets)"),
+        (4, "probe: hit band-bucket set (<= nBuckets, fused-stats fallback) + candidate shingle-bucket set, uncapped and capped variants (<= nDocBuckets, + 1 margin row on the capped path); ingestBatch: fused batch-stats rows (2: validation counts + <= nBuckets/nDocBuckets bucket sets)"),
       "operators/PartitionedIndexOps.scala" ->
-        (1, "overwriteAffected: present-partition id set, <= the caller's bucket count"),
+        (2, "the one merge upsert of all six index families: affected-partition key set + present-partition key set after the staged overwrite, each <= the family's main-table partition count (nBuckets / nLists / 2^numPlanes / 2·batch·L table-bucket pairs)"),
       "operators/Pq.scala" ->
         (2, "PQ trainer: k-row codebook init (k <= 256) + one mean row per occupied code per subspace"),
       "operators/IvfPq.scala" ->
-        (2, "probe: rerank-capped candidate-id point-lookup keys (<= 1024); upsert: affected-list id set, <= nLists (doc-bucket set rides the fused validation agg)"),
+        (1, "probe: rerank-capped candidate-id point-lookup keys (<= 1024)"),
       "operators/SimilarityQueries.scala" ->
         (4, "q158/q172/q173/q176 evals: nQ=10 query-vector rows each (literal bound)"),
       "operators/LshIndex.scala" ->
-        (6, "upserts (single + multi): doc-bucket + affected-partition sets (<= nDocBuckets / <= 2^numPlanes / <= 2·batch·L pairs); batchProbe/batchProbeMulti: probe-partition unions (<= 2^numPlanes / <= anchors×L)"),
+        (2, "batchProbe/batchProbeMulti: probe-partition unions (<= 2^numPlanes / <= anchors×L)"),
       "operators/CurationQueries.scala" ->
         (1, "q109 CMS: one serialized sketch per language"),
       "operators/Curation.scala" ->
@@ -251,6 +249,26 @@ class PlanSpec extends AnyFunSuite {
       s"collect() call sites not in the bounded whitelist (add only with a documented bound): $unexpected")
     val stale = bounded.keys.filterNot(found.contains)
     assert(stale.isEmpty, s"whitelist entries with no collect anymore: $stale")
+  }
+
+  test("index commit primitives are called only from PartitionedIndexOps") {
+    // every build and upsert of the six persisted index families commits
+    // through PartitionedIndexOps' one guarded lifecycle (check, claim,
+    // stage, version check, commit); a family calling a primitive directly
+    // would reopen a second, hand-ordered commit path
+    val primitives = Seq("claimVersion(", "requireVersion(",
+      "overwriteAffected", "pinWrite(")
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val offenders = scala.collection.mutable.ListBuffer.empty[String]
+    java.nio.file.Files.walk(root).forEach { p =>
+      val rel = root.relativize(p).toString
+      if (rel.endsWith(".scala") && rel != "operators/PartitionedIndexOps.scala") {
+        val src = java.nio.file.Files.readString(p)
+        primitives.filter(src.contains).foreach(m => offenders += s"$rel: $m")
+      }
+    }
+    assert(offenders.isEmpty,
+      s"index commit primitives called outside PartitionedIndexOps: $offenders")
   }
 
   test("contamination eval shingles broadcast at plan time, not via AQE") {
